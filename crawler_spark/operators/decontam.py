@@ -48,6 +48,9 @@ def decontaminate(
     Returns (id_col, n_shingles, n_contaminated, contaminated). A
     document with fewer than k tokens has n_shingles = 0 and is
     uncontaminated by definition (still present in the output).
+    ``eval_set`` must carry ``id_col`` as well as ``text_col``: both
+    sides go through the same shingle kernel, which reads
+    ``(id_col, text_col)``, and a frame without it fails at plan build.
     Matching is on xxhash64 of the shingle string — longs broadcast
     and compare cheaper than 50-100 byte shingles, and a 64-bit
     collision only ever flags a FALSE POSITIVE (safe direction for a

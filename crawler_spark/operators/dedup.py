@@ -21,6 +21,8 @@ recall against them.
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -337,11 +339,11 @@ def _murmur3_int32(value: int, seed: int) -> int:
     return h - (1 << 32) if h >= (1 << 31) else h
 
 
-# (num_planes, dims, seed) → matrix; heavyweight-init-once per task
-# (guide §4.3) — the murmur replica is pure Python, ~1k calls per build
-_PLANE_MATRIX_CACHE: dict = {}
-
-
+# heavyweight-init-once per (num_planes, dims, seed) (guide §4.3) — the
+# murmur replica is pure Python, ~1k calls per build. LRU-bounded: a
+# reused Python worker keeps this cache for its whole life, and ragged
+# dimensionalities would otherwise grow it without limit.
+@functools.lru_cache(maxsize=8)
 def _plane_matrix(num_planes: int, dims: int, seed: int):
     """The (num_planes × dims) hyperplane component matrix, each entry
     exactly ``hash(seed, plane, j) / 2^31`` as the in-expression form
@@ -354,6 +356,7 @@ def _plane_matrix(num_planes: int, dims: int, seed: int):
         hp = _murmur3_int32(p, _murmur3_int32(seed, 42))
         for j in range(dims):
             out[p, j] = _murmur3_int32(j, hp) / 2147483648.0
+    out.flags.writeable = False  # shared by every later cache hit
     return out
 
 
@@ -384,7 +387,8 @@ def hyperplane_projections(
     fold via ``np.cumsum`` — sequential left-to-right addition, the
     exact summation order of the old folds — and the per-element
     multiplies/divides are the same IEEE-double ops, so the normalized
-    vector, every projection, sign bit, bucket, and pinned histogram
+    vector, every projection (signed zeros included — the kernel adds
+    the folds' +0.0 seed back), sign bit, bucket, and pinned histogram
     downstream are bit-identical (locked by
     tests/test_dedup.py::test_hyperplane_projection_kernel_bit_identical).
     The UDF's input is a bare cast (no lambda in its child), so
@@ -419,11 +423,7 @@ def hyperplane_projections(
             else:
                 by_d.setdefault(len(v), []).append(i)
         for d, idxs in by_d.items():
-            key = (num_planes, d, seed)
-            M = _PLANE_MATRIX_CACHE.get(key)
-            if M is None:
-                M = _PLANE_MATRIX_CACHE[key] = _plane_matrix(
-                    num_planes, d, seed)
+            M = _plane_matrix(num_planes, d, seed)
             # bound the (rows × planes × dims) cumsum intermediate to
             # ~16 MB regardless of batch size or dimensionality (guide
             # §5 — executor memory; chunking across ROWS cannot change
@@ -440,7 +440,9 @@ def hyperplane_projections(
                 denom = np.where(zero, 1.0, nrm)[:, None]
                 vn = np.where(zero[:, None], mat, mat / denom)
                 prod = vn[:, None, :] * M[None, :, :]
-                proj = np.cumsum(prod, axis=2)[:, :, -1]
+                # + 0.0 = the fold's +0.0 seed: turns an all-(-0.0)
+                # sum into +0.0 and leaves every other value unchanged
+                proj = np.cumsum(prod, axis=2)[:, :, -1] + 0.0
                 for k, i in enumerate(part):
                     v_out[i] = vn[k].tolist()
                     p_out[i] = proj[k].tolist()

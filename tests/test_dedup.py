@@ -136,7 +136,12 @@ class TestEmbeddingLSH:
         projections, sign bits, and (band, bucket) assignments all
         flow from it, and the ANN pins downstream tolerate zero drift.
         Covers the real embeddings table plus NULL vector, NULL
-        element, empty vector, and a ragged dimensionality."""
+        element, empty vector, a ragged dimensionality, and rows whose
+        products are all zeros of either sign (the fold seeds at +0.0,
+        so its sums are never -0.0). Compared as IEEE bit patterns,
+        which ``==`` is not (-0.0 == 0.0)."""
+        import struct
+
         from pyspark.sql import functions as F
 
         from crawler_spark.functions import vector as V
@@ -174,14 +179,34 @@ class TestEmbeddingLSH:
              (9000003, []),
              (9000004, [0.25, -0.75]),
              (9000005, [0.0, 0.0, 0.0]),  # zero norm: passthrough arm
-             (9000006, [1e-18, -1e-18, 1e-18, 2.0])],
+             (9000006, [1e-18, -1e-18, 1e-18, 2.0]),
+             (9000007, [-0.0]),
+             (9000008, [0.0, -0.0])],
             "vec_id long, embedding array<double>")
+
+        def bits(xs):
+            return None if xs is None else tuple(
+                None if x is None else struct.pack("<d", x) for x in xs)
+
         for df in (emb, weird):
-            want = {r.id: (r.v, r.proj) for r in expression_form(
+            want = {r.id: (bits(r.v), bits(r.proj)) for r in expression_form(
                 df, "embedding", "vec_id", 16, 42).collect()}
-            got = {r.id: (r.v, r.proj) for r in hyperplane_projections(
+            got = {r.id: (bits(r.v), bits(r.proj)) for r in hyperplane_projections(
                 df, "embedding", "vec_id", 16, 42).collect()}
-            assert got == want  # exact float equality, no tolerance
+            assert got == want  # exact bit equality, signed zeros included
+
+    def test_plane_matrix_cache_is_bounded(self):
+        """Reused Python workers keep the plane-matrix cache for their
+        whole life: ragged dimensionalities must not grow it past its
+        cap, and a hit returns the cached matrix."""
+        from crawler_spark.operators.dedup import _plane_matrix
+
+        cap = _plane_matrix.cache_info().maxsize
+        assert cap is not None
+        for d in range(1, 3 * cap + 2):
+            _plane_matrix(2, d, 42)
+            assert _plane_matrix.cache_info().currsize <= cap
+        assert _plane_matrix(2, 3 * cap + 1, 42) is _plane_matrix(2, 3 * cap + 1, 42)
 
     def test_canonical_assignment(self, spark):
         from crawler_spark.operators.dedup import canonical_assignment
